@@ -4,7 +4,7 @@ Single home for the conversion coefficients so the JPEG codec
 (`jpegcodec.py`, which needs unrounded float planes for the DCT) and the
 Y4M video codec (`videocodec.py`, which needs rounded uint8 pixels) cannot
 drift apart — the cross-codec round-trip/PSNR contracts in
-tests/test_jpegcodec.py and tests/test_multimodal.py assume identical
+the JPEG and Y4M tests assume identical
 coefficients on both sides.
 """
 

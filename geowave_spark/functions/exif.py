@@ -33,7 +33,7 @@ def _ifd_entries(buf: bytes, order: str, ifd_off: int) -> dict[int, tuple[int, i
         off = ifd_off + 2 + 12 * i
         tag, ttype, count = struct.unpack_from(order + "HHI", buf, off)
         if ttype not in _TYPE_SIZE or count == 0:
-            continue  # unknown type / empty entry (same skip as tiffcodec)
+            continue  # unknown field type / empty entry: skip per spec
         size = _TYPE_SIZE[ttype] * count
         if size > len(buf):
             raise ValueError(f"EXIF entry {tag} overruns the block")

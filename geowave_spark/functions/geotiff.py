@@ -23,8 +23,9 @@ TIFF 6.0 spec to 16-bit *samples*, not bytes), either byte order.
 Rotated ModelTransformation matrices raise (the tile pyramid is
 axis-aligned; same refusal GeoTools' grid-to-CRS shear check performs).
 
-Pure numpy + struct + zlib; compression helpers shared with
-:mod:`geowave_spark.functions.tiffcodec`.
+Pure numpy + struct + zlib; the TIFF LZW and PackBits strip codecs live
+here.  Corrupt or truncated payloads raise ValueError, never a bare
+KeyError, TypeError, struct.error or zlib.error.
 """
 
 from __future__ import annotations
@@ -33,13 +34,6 @@ import struct
 import zlib
 
 import numpy as np
-
-from geowave_spark.functions.tiffcodec import (
-    _packbits_decode,
-    _packbits_encode,
-    _tiff_lzw_decode,
-    _tiff_lzw_encode,
-)
 
 # baseline tags (TIFF 6.0 §8)
 _WIDTH, _LENGTH, _BITS, _COMPRESSION, _PHOTO = 256, 257, 258, 259, 262
@@ -54,12 +48,169 @@ GDAL_NODATA = 42113
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 12: 8}  # BYTE ASCII SHORT LONG RATIONAL DOUBLE
 _TYPE_FMT = {1: "B", 2: "B", 3: "H", 4: "I", 12: "d"}
+# layout tags index strips and size the grid: TIFF 6.0 types them SHORT/LONG
+_STRUCTURAL = frozenset(
+    (_WIDTH, _LENGTH, _BITS, _COMPRESSION, _STRIP_OFFSETS, _SAMPLES,
+     _ROWS_PER_STRIP, _STRIP_COUNTS, _PREDICTOR, _SAMPLE_FORMAT)
+)
+
+
+def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
+    """TIFF-flavor LZW (TIFF 6.0 §13): MSB-first bit packing, ClearCode 256
+    / EOI 257, and the spec's "early change" — the code width bumps when the
+    decoder's table length reaches 511/1023/2047 (one entry earlier than
+    the natural LZW rule; the libtiff-compatible convention)."""
+    CLEAR, EOI = 256, 257
+    base = [bytes([i]) for i in range(256)] + [b"", b""]
+    table: list[bytes] | None = None
+    width = 9
+    acc = bits = 0
+    prev: bytes | None = None
+    out = bytearray()
+    for byte in data:
+        acc = (acc << 8) | byte
+        bits += 8
+        while bits >= width:
+            code = (acc >> (bits - width)) & ((1 << width) - 1)
+            bits -= width
+            acc &= (1 << bits) - 1
+            if code == CLEAR:
+                table = list(base)
+                width = 9
+                prev = None
+                continue
+            if code == EOI:
+                if len(out) < expected:
+                    raise ValueError("TIFF LZW stream ended before strip filled")
+                return bytes(out[:expected])
+            if table is None:
+                raise ValueError("TIFF LZW stream must start with ClearCode")
+            if code < len(table):
+                entry = table[code]
+                if prev is not None:
+                    table.append(prev + entry[:1])
+            elif code == len(table) and prev is not None:
+                entry = prev + prev[:1]  # the KwKwK case
+                table.append(entry)
+            else:
+                raise ValueError(f"corrupt TIFF LZW stream (code {code})")
+            out.extend(entry)
+            prev = entry
+            if len(table) in (511, 1023, 2047):
+                width += 1
+            if len(out) >= expected:
+                return bytes(out[:expected])
+    raise ValueError("truncated TIFF LZW stream")
+
+
+def _tiff_lzw_encode(data: bytes) -> bytes:
+    """TIFF-flavor LZW encoder.  The emitted code widths track a SIMULATED
+    decoder (same early-change rule as :func:`_tiff_lzw_decode`), so
+    alignment is correct by construction."""
+    CLEAR, EOI = 256, 257
+    out = bytearray()
+    acc = bits = 0
+
+    state = {"width": 9, "dec_len": 258, "first": True}
+
+    def write(code: int) -> None:
+        nonlocal acc, bits
+        acc = (acc << state["width"]) | code
+        bits += state["width"]
+        while bits >= 8:
+            out.append((acc >> (bits - 8)) & 0xFF)
+            bits -= 8
+        acc &= (1 << bits) - 1
+
+    def emit(code: int) -> None:
+        write(code)
+        if state["first"]:
+            state["first"] = False
+        else:
+            state["dec_len"] += 1
+            if state["dec_len"] in (511, 1023, 2047):
+                state["width"] += 1
+
+    def reset_tables():
+        state["width"] = 9
+        state["dec_len"] = 258
+        state["first"] = True
+        return {bytes([i]): i for i in range(256)}, 258
+
+    write(CLEAR)
+    table, next_code = reset_tables()
+    run = b""
+    for b in data:
+        cand = run + bytes([b])
+        if cand in table:
+            run = cand
+            continue
+        emit(table[run])
+        table[cand] = next_code
+        next_code += 1
+        if next_code >= 4094:  # leave room before the 12-bit ceiling
+            emit(CLEAR)  # note: goes through emit so the sim stays aligned
+            table, next_code = reset_tables()
+            # CLEAR resets the simulated decoder immediately, not one-behind
+        run = bytes([b])
+    if run:
+        emit(table[run])
+    emit(EOI)
+    if bits:
+        out.append((acc << (8 - bits)) & 0xFF)
+    return bytes(out)
+
+
+def _packbits_decode(data: bytes, expected: int) -> bytes:
+    out = bytearray()
+    i = 0
+    while i < len(data) and len(out) < expected:
+        n = data[i]
+        i += 1
+        if n < 128:  # literal run of n+1 bytes
+            out.extend(data[i : i + n + 1])
+            i += n + 1
+        elif n > 128:  # repeat next byte 257-n times
+            out.extend(data[i : i + 1] * (257 - n))
+            i += 1
+        # n == 128: no-op
+    if len(out) < expected:
+        raise ValueError("truncated PackBits strip")
+    return bytes(out[:expected])
+
+
+def _packbits_encode(row: bytes) -> bytes:
+    """Per-row PackBits (the spec's recommended scope)."""
+    out = bytearray()
+    i, n = 0, len(row)
+    while i < n:
+        # find run length at i
+        j = i
+        while j + 1 < n and row[j + 1] == row[i] and j - i < 127:
+            j += 1
+        run = j - i + 1
+        if run >= 2:
+            out.append(257 - run)
+            out.append(row[i])
+            i = j + 1
+        else:
+            # literal segment until the next >=3 run (2-runs inside literals
+            # are cheaper left literal) or 128 bytes
+            k = i
+            while k < n and k - i < 128:
+                if k + 2 < n and row[k] == row[k + 1] == row[k + 2]:
+                    break
+                k += 1
+            out.append(k - i - 1)
+            out.extend(row[i:k])
+            i = k
+    return bytes(out)
 
 
 def _read_entries(buf: bytes, order: str) -> dict[int, list]:
-    """IFD walk like tiffcodec's, extended with DOUBLE (12) and ASCII (2)
-    payloads — the georeferencing tags are DOUBLE arrays and GDAL_NODATA
-    is ASCII, both of which the baseline reader deliberately skips."""
+    """Baseline TIFF IFD walk over BYTE/ASCII/SHORT/LONG/DOUBLE payloads —
+    the georeferencing tags are DOUBLE arrays and GDAL_NODATA is ASCII.
+    A structural tag of any type but SHORT/LONG is refused."""
     try:
         (ifd_off,) = struct.unpack_from(order + "I", buf, 4)
         (n,) = struct.unpack_from(order + "H", buf, ifd_off)
@@ -69,6 +220,8 @@ def _read_entries(buf: bytes, order: str) -> dict[int, list]:
             tag, ttype, count = struct.unpack_from(order + "HHI", buf, off)
             if ttype not in _TYPE_FMT or count == 0:
                 continue
+            if tag in _STRUCTURAL and ttype not in (3, 4):
+                raise ValueError(f"TIFF tag {tag} must be SHORT or LONG, got type {ttype}")
             size = _TYPE_SIZE[ttype] * count
             if size <= 4:
                 vpos = off + 8
@@ -155,6 +308,9 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     else:
         raise ValueError("not a TIFF (bad magic)")
     t = _read_entries(buf, order)
+    missing = [tag for tag in (_WIDTH, _LENGTH, _STRIP_OFFSETS, _STRIP_COUNTS) if tag not in t]
+    if missing:
+        raise ValueError(f"TIFF is missing required tags {missing}")
     w, h = t[_WIDTH][0], t[_LENGTH][0]
     bits = t.get(_BITS, [1])
     samples = t.get(_SAMPLES, [1])[0]
@@ -162,8 +318,7 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     if samples != 1 or bits != [16] or sfmt != 2:
         raise ValueError(
             f"geotiff_decode handles single-band signed 16-bit rasters; got "
-            f"samples={samples} bits={bits} sample_format={sfmt} "
-            "(RGB imagery goes through tiffcodec.tiff_decode)"
+            f"samples={samples} bits={bits} sample_format={sfmt}"
         )
     comp = t.get(_COMPRESSION, [1])[0]
     if comp not in (1, 5, 8, 32773):
@@ -193,7 +348,10 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
         elif comp == 5:
             data = _tiff_lzw_decode(raw, expected)
         elif comp == 8:
-            data = zlib.decompress(raw)[:expected]
+            try:
+                data = zlib.decompress(raw)[:expected]
+            except zlib.error as exc:
+                raise ValueError(f"corrupt deflate strip: {exc}") from None
             if len(data) < expected:
                 raise ValueError("short deflate strip")
         else:
@@ -208,9 +366,12 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
 
     nodata = None
     if GDAL_NODATA in t:
-        txt = bytes(t[GDAL_NODATA]).split(b"\x00")[0].strip()
-        if txt:
-            nodata = int(float(txt))
+        try:
+            txt = bytes(t[GDAL_NODATA]).split(b"\x00")[0].strip()
+            if txt:
+                nodata = int(float(txt))
+        except (TypeError, OverflowError) as exc:
+            raise ValueError(f"bad GDAL_NODATA tag: {exc}") from None
     return grid.astype(np.int32), _bounds_from_tags(t, w, h), nodata
 
 

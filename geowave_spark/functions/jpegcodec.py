@@ -3,9 +3,10 @@
 Earlier rounds scoped JPEG out as "genuinely needs a library" — that was
 too pessimistic.  Baseline sequential JFIF (ITU-T T.81) is an 8x8 DCT, a
 quantizer, and canonical Huffman coding: plain math and bit-twiddling, all
-of it in numpy + stdlib.  This module de-stubs the last image format the
-synthetic corpus cares about, so ``decode_media(codec="real")`` covers
-BMP/PPM/PNG *and* JPEG with zero external dependencies.
+of it in numpy + stdlib.  It is a standalone library (also used for the
+JPEG strips of :mod:`geowave_spark.functions.tiffcodec` and the MJPEG
+frames of :mod:`geowave_spark.functions.avicodec`); no query decodes
+pixels — media ingest reads EXIF headers only.
 
 Scope (stated honestly):
 
@@ -23,8 +24,7 @@ Scope (stated honestly):
   scans over true component block grids, spectral selection and
   successive approximation (DC and AC first + refinement scans).
   Arithmetic-coded (SOF9+) and hierarchical streams raise with the
-  integration point documented (plug PIL/libav into
-  :func:`geowave_spark.functions.imagecodec.decode_image`).
+  integration point documented (those need PIL/libav).
 - JPEG is lossy: flat-color images (DC-only blocks) round-trip within ONE
   grey level at quality >= 85 (DC quantizer error q/16 in luma plus up to
   1.772x the chroma DC error through the inverse color transform — a
@@ -978,8 +978,7 @@ def _decode_scan_progressive(
 def jpeg_decode(buf: bytes) -> np.ndarray:
     """Decode a baseline or progressive JFIF JPEG into (h, w, 3) uint8 RGB.
 
-    Grayscale streams are replicated to 3 channels (same contract as PNG
-    color type 0 in :mod:`geowave_spark.functions.imagecodec`).  Corrupt or
+    Grayscale streams are replicated to 3 channels.  Corrupt or
     truncated streams raise ValueError (the whole codec family's contract),
     never a bare KeyError/IndexError/struct.error.
     """

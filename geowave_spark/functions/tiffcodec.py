@@ -1,18 +1,16 @@
 """Dependency-free baseline TIFF codec (pure numpy + struct).
 
-De-stubs the TIFF branch of
-:func:`geowave_spark.functions.imagecodec.decode_image` for the baseline
-profile (TIFF 6.0 spec, part 1): uncompressed or PackBits-compressed,
-8-bit grayscale (both polarities), palette-color (ColorMap), or
-RGB/RGBA, strip-organized, either byte order (II/MM).  That covers
-scanner/GIS-style output; LZW/JPEG-in-TIFF, tiled organization,
-planar-separate, and separated/YCbCr photometrics raise with the
-integration point named — the same honesty contract as the other
-codecs — and malformed/truncated payloads raise ValueError, never a
-bare struct.error.
+Decodes strip-organized TIFF (TIFF 6.0 spec, part 1) in either byte order
+(II/MM): 8-bit grayscale (both polarities), palette-color (ColorMap) or
+RGB/RGBA with none/PackBits/LZW/Deflate compression (optional predictor 2)
+or JPEG strips, and 1-bit bilevel with CCITT MH/G4 strips.  Tiled
+organization, planar-separate and separated photometrics raise naming the
+missing feature; malformed/truncated payloads raise ValueError, never a
+bare struct.error.  The PackBits and LZW strip codecs are shared with
+:mod:`geowave_spark.functions.geotiff`.
 
-The encoder writes single-IFD little-endian RGB strips (optionally
-PackBits) for fixtures and export; round-trips are bit-exact.
+The encoder writes single-IFD little-endian strips for fixtures and
+export; lossless round-trips are bit-exact.
 """
 
 from __future__ import annotations
@@ -21,6 +19,13 @@ import struct
 
 import numpy as np
 
+from geowave_spark.functions.geotiff import (
+    _packbits_decode,
+    _packbits_encode,
+    _tiff_lzw_decode,
+    _tiff_lzw_encode,
+)
+
 # tag ids (TIFF 6.0 §8)
 _WIDTH, _LENGTH, _BITS, _COMPRESSION, _PHOTO = 256, 257, 258, 259, 262
 _STRIP_OFFSETS, _SAMPLES, _ROWS_PER_STRIP, _STRIP_COUNTS = 273, 277, 278, 279
@@ -28,112 +33,6 @@ _PLANAR, _PREDICTOR, _COLORMAP = 284, 317, 320
 _FILL_ORDER, _T4_OPTIONS, _T6_OPTIONS = 266, 292, 293
 _TILE_TAGS = (322, 323, 324, 325)  # TileWidth/Length/Offsets/ByteCounts
 _JPEG_TABLES = 347
-
-
-def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
-    """TIFF-flavor LZW (TIFF 6.0 §13): MSB-first bit packing, ClearCode 256
-    / EOI 257, and the spec's "early change" — the code width bumps when the
-    decoder's table length reaches 511/1023/2047 (one entry earlier than
-    the natural LZW rule; the libtiff-compatible convention)."""
-    CLEAR, EOI = 256, 257
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table: list[bytes] | None = None
-    width = 9
-    acc = bits = 0
-    prev: bytes | None = None
-    out = bytearray()
-    for byte in data:
-        acc = (acc << 8) | byte
-        bits += 8
-        while bits >= width:
-            code = (acc >> (bits - width)) & ((1 << width) - 1)
-            bits -= width
-            acc &= (1 << bits) - 1
-            if code == CLEAR:
-                table = list(base)
-                width = 9
-                prev = None
-                continue
-            if code == EOI:
-                if len(out) < expected:
-                    raise ValueError("TIFF LZW stream ended before strip filled")
-                return bytes(out[:expected])
-            if table is None:
-                raise ValueError("TIFF LZW stream must start with ClearCode")
-            if code < len(table):
-                entry = table[code]
-                if prev is not None:
-                    table.append(prev + entry[:1])
-            elif code == len(table) and prev is not None:
-                entry = prev + prev[:1]  # the KwKwK case
-                table.append(entry)
-            else:
-                raise ValueError(f"corrupt TIFF LZW stream (code {code})")
-            out.extend(entry)
-            prev = entry
-            if len(table) in (511, 1023, 2047):
-                width += 1
-            if len(out) >= expected:
-                return bytes(out[:expected])
-    raise ValueError("truncated TIFF LZW stream")
-
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    """TIFF-flavor LZW encoder.  The emitted code widths track a SIMULATED
-    decoder (same early-change rule as :func:`_tiff_lzw_decode`), so
-    alignment is correct by construction."""
-    CLEAR, EOI = 256, 257
-    out = bytearray()
-    acc = bits = 0
-
-    state = {"width": 9, "dec_len": 258, "first": True}
-
-    def write(code: int) -> None:
-        nonlocal acc, bits
-        acc = (acc << state["width"]) | code
-        bits += state["width"]
-        while bits >= 8:
-            out.append((acc >> (bits - 8)) & 0xFF)
-            bits -= 8
-        acc &= (1 << bits) - 1
-
-    def emit(code: int) -> None:
-        write(code)
-        if state["first"]:
-            state["first"] = False
-        else:
-            state["dec_len"] += 1
-            if state["dec_len"] in (511, 1023, 2047):
-                state["width"] += 1
-
-    def reset_tables():
-        state["width"] = 9
-        state["dec_len"] = 258
-        state["first"] = True
-        return {bytes([i]): i for i in range(256)}, 258
-
-    write(CLEAR)
-    table, next_code = reset_tables()
-    run = b""
-    for b in data:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        next_code += 1
-        if next_code >= 4094:  # leave room before the 12-bit ceiling
-            emit(CLEAR)  # note: goes through emit so the sim stays aligned
-            table, next_code = reset_tables()
-            # CLEAR resets the simulated decoder immediately, not one-behind
-        run = bytes([b])
-    if run:
-        emit(table[run])
-    emit(EOI)
-    if bits:
-        out.append((acc << (8 - bits)) & 0xFF)
-    return bytes(out)
 
 
 def _undiff(px: np.ndarray) -> np.ndarray:
@@ -175,24 +74,6 @@ def _read_entries(buf: bytes, order: str) -> dict[int, list[int]]:
     return tags
 
 
-def _packbits_decode(data: bytes, expected: int) -> bytes:
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:  # literal run of n+1 bytes
-            out.extend(data[i : i + n + 1])
-            i += n + 1
-        elif n > 128:  # repeat next byte 257-n times
-            out.extend(data[i : i + 1] * (257 - n))
-            i += 1
-        # n == 128: no-op
-    if len(out) < expected:
-        raise ValueError("truncated PackBits strip")
-    return bytes(out[:expected])
-
-
 def tiff_decode(buf: bytes) -> np.ndarray:
     """Decode a baseline TIFF into an (h, w, 3) uint8 RGB array."""
     if buf[:4] == b"II*\x00":
@@ -210,7 +91,7 @@ def tiff_decode(buf: bytes) -> np.ndarray:
     if any(tag in t for tag in _TILE_TAGS):
         raise ValueError(
             "tiled TIFF not supported (baseline strip organization only; "
-            "plug PIL into imagecodec.decode_image for tiled files)"
+            "tiled files need PIL)"
         )
     try:
         w, h = t[_WIDTH][0], t[_LENGTH][0]
@@ -229,7 +110,7 @@ def tiff_decode(buf: bytes) -> np.ndarray:
         raise ValueError(
             f"unsupported TIFF: bits={bits} samples={spp} planar={planar} "
             "(baseline 8-bit chunky grey/RGB/RGBA + 1-bit bilevel only; "
-            "plug PIL in imagecodec.decode_image for the rest)"
+            "the rest needs PIL)"
         )
     if photo not in (0, 1, 2, 3, 6):
         # 5=separated (CMYK), ...: decoding these as RGB would be silent
@@ -237,14 +118,14 @@ def tiff_decode(buf: bytes) -> np.ndarray:
         # JPEG strips, checked below)
         raise ValueError(
             f"unsupported TIFF photometric {photo} (MinIsWhite/MinIsBlack/"
-            "RGB/palette/JPEG-YCbCr only; plug PIL into imagecodec.decode_image)"
+            "RGB/palette/JPEG-YCbCr only; the rest needs PIL)"
         )
     if photo == 6 and comp != 7:
         # YCbCr is only supported as new-style JPEG strips, where the JPEG
         # decoder performs the color transform itself
         raise ValueError(
             "unsupported TIFF photometric 6 without JPEG compression "
-            "(plug PIL into imagecodec.decode_image)"
+            "(needs PIL)"
         )
     if (photo in (0, 1, 3)) and spp >= 3 or photo == 2 and spp == 1 or (
         photo == 3 and spp != 1
@@ -445,34 +326,6 @@ def tiff_bilevel_bytes(
         out += struct.pack(f"<{n_strips}I", *(len(s) for s in strips))
     for s in strips:
         out += s
-    return bytes(out)
-
-
-def _packbits_encode(row: bytes) -> bytes:
-    """Per-row PackBits (the spec's recommended scope)."""
-    out = bytearray()
-    i, n = 0, len(row)
-    while i < n:
-        # find run length at i
-        j = i
-        while j + 1 < n and row[j + 1] == row[i] and j - i < 127:
-            j += 1
-        run = j - i + 1
-        if run >= 2:
-            out.append(257 - run)
-            out.append(row[i])
-            i = j + 1
-        else:
-            # literal segment until the next >=3 run (2-runs inside literals
-            # are cheaper left literal) or 128 bytes
-            k = i
-            while k < n and k - i < 128:
-                if k + 2 < n and row[k] == row[k + 1] == row[k + 2]:
-                    break
-                k += 1
-            out.append(k - i - 1)
-            out.extend(row[i:k])
-            i = k
     return bytes(out)
 
 

@@ -1,6 +1,5 @@
 """Dependency-free Y4M (YUV4MPEG2) video codec in pure numpy.
 
-De-stubs the video modality of :mod:`geowave_spark.functions.multimodal`:
 Y4M is the uncompressed interchange format the mjpegtools/ffmpeg ecosystem
 uses — an ASCII stream header, then per-frame ``FRAME`` markers followed by
 raw planes — so, like BMP/PPM/WAV, it needs no media library.

@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import shutil
 import time
+import warnings
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
@@ -35,6 +36,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_manifest.json"
+
+_fallback_warned = False  # truncate_plan's fallback warns once per process
 
 
 def truncate_plan(df: DataFrame) -> DataFrame:
@@ -60,8 +63,8 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     ``internalCreateDataFrame`` — a LogicalRDD with NO inherited stats
     (default sizeInBytes; AQE re-plans every exchange from runtime sizes,
     so join strategies stay correct).  Per-round stats work is O(1)
-    forever after.  Falls back to the plain checkpoint if the JVM surface
-    ever drifts."""
+    forever after.  Falls back to the plain checkpoint, with a one-time
+    RuntimeWarning, if the JVM surface ever drifts."""
     ck = df.localCheckpoint()
     try:
         jdf = ck._jdf
@@ -71,7 +74,16 @@ def truncate_plan(df: DataFrame) -> DataFrame:
             jplan.rdd(), jdf.schema(), False
         )
         return DataFrame(jnew, spark)
-    except Exception:  # pragma: no cover - JVM API drift safety net
+    except Exception as exc:  # JVM API drift safety net
+        global _fallback_warned
+        if not _fallback_warned:
+            _fallback_warned = True
+            warnings.warn(
+                f"truncate_plan fell back to a plain localCheckpoint ({exc!r}); "
+                "iterative operators keep compounding plan statistics",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return ck
 
 

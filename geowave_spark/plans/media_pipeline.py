@@ -5,7 +5,7 @@ with checkpointed lineage at every stage.
 The north rule extracts geometries from INTERLEAVED text+media document
 spans.  ``run_docs_pipeline`` covers the text half (geo spans to WKT);
 this covers the media half — EXIF GPS lifted from binary payloads
-(:func:`geowave_spark.functions.multimodal.media_geo_extract`), linked
+(:func:`media_geo_extract`, headers only, no pixel decode), linked
 back to owning documents through their media spans, unioned with the text
 centroids, and driven through the SAME cell-bucketed PIP join.  Every
 stage is a `Pipeline.stage` (manifest-committed parquet, per-partition
@@ -15,13 +15,51 @@ a config change rebuilds exactly the downstream stages.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geowave_spark.extract import with_geometry
-from geowave_spark.functions.multimodal import media_geo_extract
 from geowave_spark.operators.spatial_join import pip_join
 from geowave_spark.plans.lineage import Pipeline
+
+
+def media_geo_extract(media: DataFrame) -> DataFrame:
+    """``(media_ref, lon, lat)`` from EXIF-geotagged payloads (JPEG APP1 /
+    TIFF GPS IFD, via :mod:`geowave_spark.functions.exif`); untagged media
+    is dropped.  This is the media half of the north star's "geometries
+    extracted from interleaved text+media document spans": the output
+    points feed :func:`geowave_spark.operators.spatial_join.pip_join` and
+    the SFC indexing layer like any other point table.  The EXIF walk only
+    parses headers (no pixel decode), so the stage is I/O-bound and
+    embarrassingly parallel."""
+
+    def _ext(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from geowave_spark.functions.exif import gps_from_media
+
+        for pdf in batches:
+            refs, lons, lats = [], [], []
+            for ref, c in zip(pdf["media_ref"], pdf["content"]):
+                if c is None:
+                    continue
+                g = gps_from_media(bytes(c))
+                if g is None:
+                    continue
+                refs.append(ref)
+                lons.append(g[0])
+                lats.append(g[1])
+            yield pd.DataFrame(
+                {
+                    "media_ref": refs,
+                    "lon": np.asarray(lons, dtype=np.float64),
+                    "lat": np.asarray(lats, dtype=np.float64),
+                }
+            )
+
+    return media.mapInPandas(_ext, "media_ref string, lon double, lat double")
 
 
 def run_media_geo_pipeline(

@@ -46,8 +46,7 @@ POINT_COLS = ["source", "track_id", "point_idx", "ts", "lon", "lat", "elevation"
 
 # Whole-file parses (GPX, GeoJSON lines=False) make ONE Arrow row / ONE task
 # out of each file: a multi-GB upload would OOM an executor with an opaque
-# Arrow error.  Refuse clearly instead — the same implausible-input
-# discipline as the media codecs' dimension guards.
+# Arrow error.  Refuse clearly instead of attempting the parse.
 MAX_WHOLE_FILE_BYTES = 256 * 1024 * 1024
 
 

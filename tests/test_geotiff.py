@@ -11,6 +11,8 @@ pipeline downstream is already oracle-covered.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -84,11 +86,21 @@ def test_refusals():
         )
     with pytest.raises(ValueError, match="no georeferencing"):
         G._bounds_from_tags({}, 4, 4)
+    # the same file re-labelled as 3 samples per pixel (RGB)
+    rgb = bytearray(buf)
+    (n,) = struct.unpack_from("<H", rgb, 8)
+    for i in range(n):
+        entry = 8 + 2 + 12 * i
+        if struct.unpack_from("<H", rgb, entry)[0] == G._SAMPLES:
+            struct.pack_into("<H", rgb, entry + 8, 3)
     with pytest.raises(ValueError, match="single-band"):
-        from geowave_spark.functions.tiffcodec import tiff_bytes
-
-        rgb = np.zeros((4, 4, 3), dtype=np.uint8)
-        G.geotiff_decode(tiff_bytes(rgb))
+        G.geotiff_decode(bytes(rgb))
+    # a non-finite GDAL_NODATA string (the inline ASCII "-1\0" -> "inf")
+    nd = bytearray(buf)
+    pos = nd.index(b"-1\x00")
+    nd[pos : pos + 3] = b"inf"
+    with pytest.raises(ValueError, match="GDAL_NODATA"):
+        G.geotiff_decode(bytes(nd))
     with pytest.raises(ValueError, match="empty envelope"):
         G.geotiff_bytes(g, (1.0, 0.0, 1.0, 1.0))
 

@@ -236,10 +236,3 @@ def test_progressive_malformed_dc_scan_rejected():
 def test_not_a_jpeg_rejected():
     with pytest.raises(ValueError, match="not a JPEG"):
         jpeg_decode(b"BMnope")
-
-
-def test_decode_image_dispatches_on_magic():
-    from geowave_spark.functions.imagecodec import decode_image
-
-    img = np.full((8, 8, 3), (10, 200, 30), np.uint8)
-    assert (decode_image(jpeg_bytes(img, quality=90)) == img).all()

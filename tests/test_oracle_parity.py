@@ -10,23 +10,11 @@ order-insensitive value hash), so deregistering never weakens coverage.
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 
+from geowave_spark.queries import value_hash
+
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _value_hash(rows, col_order):
-    def norm(v):
-        if isinstance(v, float):
-            return repr(v)
-        if isinstance(v, bool):
-            return str(int(v))
-        return str(v)
-
-    lines = sorted("\x1f".join(norm(r[i]) for i in col_order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +56,7 @@ def test_excluded_query_matches_oracle(spark, duck, name):
     assert len(srows) == len(orows)
     s_order = sorted(range(len(scols)), key=lambda i: scols[i])
     o_order = sorted(range(len(ocols)), key=lambda i: ocols[i])
-    assert _value_hash(srows, s_order) == _value_hash(orows, o_order)
+    assert value_hash(srows, s_order) == value_hash(orows, o_order)
 
 
 def test_driver_surface_contract():

@@ -9,7 +9,6 @@ order-insensitive value hash.  Usage:
 
 from __future__ import annotations
 
-import hashlib
 import sys
 import time
 from pathlib import Path
@@ -19,22 +18,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def value_hash(rows: list[tuple], col_order: list[int]) -> str:
-    def norm(v):
-        if isinstance(v, float):
-            return repr(v)
-        if isinstance(v, bool):
-            return str(int(v))
-        return str(v)
-
-    lines = sorted("\x1f".join(norm(r[i]) for i in col_order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
-
-
 def main() -> int:
     import duckdb
 
     import __spark_entry__ as e
+    from geowave_spark.queries import value_hash
     from geowave_spark.session import get_spark
 
     wanted = [a for a in sys.argv[1:] if a != "--driver-surface"]
@@ -104,7 +92,7 @@ def main() -> int:
                     print("   oracle-only:", d)
                 ok = False
         if ok:
-            print(f"ok    {name}: {len(srows)} rows in {dt:.1f}s")
+            print(f"ok    {name}: {len(srows)} rows, hash {h1} in {dt:.1f}s")
         else:
             failures += 1
     spark.stop()

@@ -13,7 +13,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.check_oracle import SF_DIR, value_hash  # noqa: E402
+from geowave_spark.queries import value_hash  # noqa: E402
+from tools.check_oracle import SF_DIR  # noqa: E402
 
 
 def _norm(v) -> str:
